@@ -1,14 +1,14 @@
 """adscraper_spark — a PySpark-native URL-frontier + fetch scheduler.
 
-A brand-new engine with the crawl semantics of UWCSESecurityLab/adscraper
-(reference read-only at /root/reference), re-expressed as idiomatic Spark:
+A brand-new engine with the crawl semantics of UWCSESecurityLab/adscraper,
+re-expressed as idiomatic Spark:
 
 - frontier / pages / results as snapshot-committed parquet tables
   (Iceberg-shaped: manifest + atomic snapshot commit; see ``store.py``),
 - per-host politeness as grouped-by-host window priority queues
   (``scheduler.py``),
 - URL-seen dedup as partitioned bloom pre-filter + exact anti-join
-  (``frontier.py`` / ``bloom.py``),
+  (``bloom.py`` / ``engine.py``),
 - all text/ad extraction as vectorized pandas/Arrow UDFs sharing one pure
   Python core with the test oracle (``extraction/``), byte-identical per URL.
 

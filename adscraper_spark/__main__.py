@@ -48,11 +48,6 @@ def _build_parser() -> argparse.ArgumentParser:
                         "this many rows are admitted (pending URLs "
                         "still drain)")
     c.add_argument("--salt-fanout", type=int, default=16)
-    c.add_argument("--seen-filter", choices=("bloom", "cuckoo"),
-                   default="bloom",
-                   help="seen-set prefilter structure: bloom (10 "
-                        "bits/key) or cuckoo (~17 bits/key, supports "
-                        "delete for recrawl expiry — cuckoo.py)")
     c.add_argument("--scan-splits-per-core", type=int, default=3,
                    help="lower spark.sql.files.maxPartitionBytes until "
                         "the corpus scan yields at least this many "
@@ -206,7 +201,6 @@ def main(argv: list[str] | None = None) -> int:
                       max_urls=args.max_urls,
                       checkpoint_every=args.checkpoint_every,
                       salt_fanout=args.salt_fanout,
-                      seen_filter=args.seen_filter,
                       scan_splits_per_core=args.scan_splits_per_core,
                       site_budget_seconds=args.site_budget_seconds,
                       compact_every=args.compact_every,

@@ -24,6 +24,8 @@ from .hashing import stable_hash64
 
 DEFAULT_BITS_PER_KEY = 10
 DEFAULT_NUM_HASHES = 7
+#: Segment sizing on first write: 100k keys per partition at 10 bits/key.
+DEFAULT_EXPECTED_KEYS = 100_000
 
 
 def partition_for_host(host: str, num_partitions: int) -> int:
@@ -123,7 +125,7 @@ class BloomStore:
     crashed wave are simply ignored on resume."""
 
     def __init__(self, root: str, num_partitions: int,
-                 expected_keys_per_partition: int = 100_000):
+                 expected_keys_per_partition: int = DEFAULT_EXPECTED_KEYS):
         self.root = root
         self.num_partitions = num_partitions
         self.expected = expected_keys_per_partition

@@ -30,14 +30,10 @@ class CrawlConfig:
     salt_fanout: int = 16            # hot-host shard count (scheduler.py)
     frontier_buckets: int = 32       # url-hash buckets for the
                                      # admitted/processed log layout
+    # T3/Z3 seen-set pre-filter: per-host-hash-partition bloom segments
+    # (bloom.py). A pre-filter only; admission correctness comes from
+    # the exact anti-join (SURVEY §4.2).
     bloom_partitions: int = 8
-    bloom_expected_per_partition: int = 100_000
-    # T3/Z3 seen-set prefilter structure: 'bloom' (10 bits/key, smallest)
-    # or 'cuckoo' (~17 bits/key, supports delete — recrawl expiry /
-    # retracting rolled-back admissions; cuckoo.py). Either way the
-    # filter is a pre-filter only; admission correctness comes from the
-    # exact anti-join (SURVEY §4.2).
-    seen_filter: str = "bloom"
     checkpoint_every: int = 1        # waves between durable checkpoints
     same_host_only: bool = True      # F4 link-admission filter
     # Z2 per-site time budget (reference: 15-min Promise.race per site,
@@ -52,16 +48,6 @@ class CrawlConfig:
     # payload); bigger waves fall back to the shuffle join over the
     # url-bucketed frontier layout.
     broadcast_wave_max: int = 5_000_000
-    # Exchange the post-fetch wave on url before the extraction UDF.
-    # Default OFF (round-4 A/B, BENCH.md): the broadcast fetch-join
-    # output inherits the corpus scan's partitioning — ∝ the wave's
-    # bucket set on a bucketed corpus, ∝ corpus files otherwise — which
-    # already feeds the UDF enough partitions, and skipping the
-    # exchange of the wave's html measured ~11% faster AND far less
-    # variant (2371 vs 2132 urls/s best-of-3 interleaved at the bench
-    # corpus). Turn on only for corpora whose scan yields fewer
-    # partitions than cores under heavy per-row extraction.
-    udf_stage_repartition: bool = False
     # Scan-split granularity floor for the no-exchange UDF stage: the
     # extraction stage inherits the corpus scan's partitioning, and a
     # corpus small enough to yield fewer splits than ~this×cores under
@@ -122,8 +108,6 @@ class CrawlConfig:
         if self.salt_fanout < 1 or self.bloom_partitions < 1 \
                 or self.frontier_buckets < 1:
             raise ValueError("bad fan-out")
-        if self.seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError("seen_filter must be 'bloom' or 'cuckoo'")
         if self.max_retries < 1:
             raise ValueError("max_retries must be >= 1")
         if self.checkpoint_every < 1:

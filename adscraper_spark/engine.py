@@ -9,10 +9,11 @@ scheduling WAVES; each wave is one declarative Spark plan:
     → per-host windowed top-k under politeness budgets   (scheduler.py)
     → "fetch" = broadcast(wave) ⋈ pages corpus — html
       never shuffles (size-gated, shuffle fallback)       (J7/S6)
-    → vectorized extraction UDF                          (extraction/)
+    → vectorized extraction UDF on the fetch join's own
+      partitioning (no exchange of the html)              (extraction/)
     → link candidates → normalize → same-host filter (F4)
-      → robots gate → in-wave dedup → bloom pre-filter
-      → exact anti-join vs admitted log                  (J5/Z3)
+      → robots gate → in-wave dedup → bloom pre-filter    (bloom.py)
+      → exact anti-join vs admitted log, bloom hits only  (J5/Z3)
     → one commit: processed+admitted+results+ads+requests appends,
       bloom segments, wave manifest (the atomic commit point, Z4).
 
@@ -47,8 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .bloom import partition_for_host
-from .cuckoo import make_seen_store
+from .bloom import BloomStore, partition_for_host
 from .config import DISCOVERED_SEQ_BASE, CrawlConfig  # noqa: F401
 from .corpus_layout import bucket_id_col, corpus_layout, prune_buckets
 from .extraction.udfs import extract_pages
@@ -202,13 +202,8 @@ class CrawlEngine:
         # against this
         self.crawl_meta = SnapshotTable(os.path.join(workdir,
                                                      "crawl_meta"))
-        # 'bloom' by name for historical reasons; CrawlConfig.seen_filter
-        # picks the structure (BloomStore or the deletable CuckooStore —
-        # cuckoo.py), both with the same segment-store API.
-        self.bloom = make_seen_store(
-            self.config.seen_filter,
-            os.path.join(workdir, "bloom"), self.config.bloom_partitions,
-            self.config.bloom_expected_per_partition)
+        self.bloom = BloomStore(os.path.join(workdir, "bloom"),
+                                self.config.bloom_partitions)
         # robots: tiny per-host dimension — kept as a DataFrame and
         # broadcast-joined wherever a gate needs it; the driver never
         # collects it (at the 10^10 north rule this table is millions of
@@ -941,29 +936,20 @@ class CrawlEngine:
         return pending
 
     # ------------------------------------------------------------------
-    def _segment_map(self, rows: DataFrame, wave: int, op: str) -> None:
-        """Shared distributed segment pass: key (url, host) rows by
-        seen-filter partition, then run ``op`` ('add' or 'delete') on
-        each partition's segment in its own executor task. ONE
-        definition of the partition keying — if update and retraction
-        ever keyed differently, probes and deletions would silently
-        target different segments (a false-negative divergence on the
-        cuckoo path). No URL list ever reaches the driver (the
-        10^10-scale requirement, SURVEY §7.3)."""
+    def _segment_map(self, rows: DataFrame, wave: int) -> None:
+        """Key (url, host) rows by bloom partition, then add each
+        partition's URLs to its segment in its own executor task. No URL
+        list ever reaches the driver (the 10^10-scale requirement,
+        SURVEY §7.3). The name is kept apart from
+        ``_update_bloom_distributed``: perfbench/tracing.py attributes
+        ``bloom.update_segment_s`` to the jobs started under it."""
         bloom_root = self.bloom.root
         nparts = self.config.bloom_partitions
-        expected = self.config.bloom_expected_per_partition
-        kind = self.config.seen_filter
 
         def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-            from .cuckoo import make_seen_store
-            store = make_seen_store(kind, bloom_root, nparts, expected)
             p = int(pdf["bpart"].iloc[0])
-            urls = pdf["url"].tolist()
-            if op == "add":
-                store.update_segment(p, wave, urls)
-            else:
-                store.delete_segment_urls(p, wave, urls)
+            BloomStore(bloom_root, nparts).update_segment(
+                p, wave, pdf["url"].tolist())
             return pd.DataFrame({"bpart": [p], "n": [len(pdf)]})
 
         keyed = rows.select("url", "host").mapInPandas(
@@ -979,26 +965,7 @@ class CrawlEngine:
                                   wave: int) -> None:
         """Per-partition segment update on executors: each group task
         loads its segment, adds its URLs, writes the next wave's file."""
-        self._segment_map(admissions, wave, "add")
-
-    def retract_seen(self, urls: DataFrame, wave: int) -> None:
-        """Delete (url, host) rows from the seen-filter segments —
-        recrawl-expiry / explicit-retraction primitive, cuckoo only
-        (bloom bits cannot be cleared). Distributed mirror of
-        ``_update_bloom_distributed``; caller must only retract URLs it
-        previously admitted (cuckoo.py delete soundness) and must pair
-        this with whatever admitted-log state change makes the URL
-        re-admittable — the filter is just the prefilter.
-
-        Deliberately NOT called by ``_rollback_to_last_commit``: a crash
-        between a retraction and the table reset would re-run the
-        retraction on resume and double-delete, stripping a surviving
-        key's colliding fingerprint (a false negative → duplicate
-        crawl). Orphan entries retained across rollback are in the safe
-        direction — they only cost exact-anti-join rows."""
-        if self.config.seen_filter != "cuckoo":
-            raise ValueError("retract_seen requires seen_filter='cuckoo'")
-        self._segment_map(urls, wave, "delete")
+        self._segment_map(admissions, wave)
 
     def _bloom_prefilter(self, cand: DataFrame, wave: int) -> DataFrame:
         """Split candidates into definitely-new (bloom miss → admit without
@@ -1007,12 +974,9 @@ class CrawlEngine:
         """
         bloom_root = self.bloom.root
         nparts = self.config.bloom_partitions
-        expected = self.config.bloom_expected_per_partition
-        kind = self.config.seen_filter
 
         def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .cuckoo import make_seen_store
-            store = make_seen_store(kind, bloom_root, nparts, expected)
+            store = BloomStore(bloom_root, nparts)
             cache: dict[int, object] = {}
             for pdf in batches:
                 hits = []
@@ -1034,15 +998,6 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     def run_wave(self, wave: int, commit: bool = True) -> dict:
         import time as _time
-        _debug = bool(os.environ.get("ADSCRAPER_SPARK_TIMING"))
-        _t = [_time.time()]
-
-        def _tick(label: str) -> None:
-            if _debug:
-                now = _time.time()
-                print(f"    [wave {wave}] {label}: {now - _t[0]:.2f}s",
-                      flush=True)
-                _t[0] = now
 
         cfg = self.config
         spark = self.spark
@@ -1067,8 +1022,6 @@ class CrawlEngine:
         # fold any staged mid-window seed batches into the frontier at
         # this wave boundary (no-op when nothing staged)
         n_late = self._drain_late_seeds(wave)
-        if n_late:
-            _tick(f"late-seed drain ({n_late})")
 
         pending = self.pending_df()
         planned = plan_wave(
@@ -1102,7 +1055,6 @@ class CrawlEngine:
         prow = planned.agg(*aggs).collect()[0]
         n_planned, n_hosts = prow["n"], prow["hosts"]
         n_timeout = int(prow["n_timeout"] or 0) if over is not None else 0
-        _tick(f"plan ({n_planned})")
         if n_planned == 0:
             planned.unpersist()
             if n_late:
@@ -1158,22 +1110,16 @@ class CrawlEngine:
                                   "priority", "seq", "src_url", "ad_id")
         fetched = fetch_join(pages, sched_cols, n_planned,
                              cfg.broadcast_wave_max).cache()
-        # Extraction is CPU-bound Python-side work: AQE coalesces the join
-        # output by *bytes* (fine for scans, wrong for a 2-5 ms/row UDF
-        # stage), so repartition to full parallelism before the UDF.
-        # (cfg.udf_stage_repartition=False skips the exchange — A/B in
-        # BENCH.md defends the default.)
-        par = spark.sparkContext.defaultParallelism
-        ok = (fetched.repartition(par, "url")
-              if cfg.udf_stage_repartition else fetched)
-        extracted = extract_pages(ok).cache()
-        if _debug:
-            extracted.count()
-            _tick("fetch+extract")
+        # The extraction UDF consumes the fetch-join output directly: it
+        # inherits the corpus scan's partitioning, which
+        # scan_splits_per_core keeps at several splits per core, so no
+        # exchange moves the wave's html before the Python stage
+        # (round-4 A/B in BENCH.md: ~11% faster than repartitioning).
+        extracted = extract_pages(fetched).cache()
 
         results_df = (
-            ok.select("url", "host", "depth", "seq", "src_url", "ad_id",
-                      "warc_ts", "lang")
+            fetched.select("url", "host", "depth", "seq", "src_url",
+                           "ad_id", "warc_ts", "lang")
             .join(extracted.select(
                 "url", "text", "n_ads", "readerable", "readability_score",
                 "rss_urls", "health_related"), "url")
@@ -1407,7 +1353,6 @@ class CrawlEngine:
             cand.unpersist()  # admissions cache holds the rows now
             n_adm = sum(adm_counts.values())
             n_dis = adm_counts.get("disallowed", 0)
-            _tick(f"admission ({n_adm})")
             if n_adm == 0:
                 adf.unpersist()
                 adf = None
@@ -1419,7 +1364,6 @@ class CrawlEngine:
         # chain) then reads the cache instead of racing to compute the
         # same cached partitions under the cache lock.
         extracted.count()
-        _tick("extract materialize")
         # The six per-wave appends are independent of one another (each
         # SnapshotTable owns its directory and manifest), so submit them
         # as concurrent Spark jobs: with W >> tasks-per-write executors
@@ -1464,7 +1408,6 @@ class CrawlEngine:
         # 'error' — the stat must point at rows that exist)
         n_errors = n_planned - n_timeout - n_fetched
         persist_sec = _time.time() - _t_persist
-        _tick("table appends + bloom + count (parallel)")
         if admissions_df is not None:
             admissions_df.unpersist()
         stats = {

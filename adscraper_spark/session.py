@@ -6,6 +6,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Ceiling of the derived driver heap (the old fixed default).
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set; otherwise a quarter of
+    physical memory, capped at 48g. A heap sized past physical memory
+    lets the JVM grow until the kernel OOM killer takes it; a quarter
+    leaves room for the Python workers and for a second local JVM (a
+    crawl CLI subprocess beside the calling process)."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 4 // 2**20, MAX_DRIVER_MEM_MB)}m"
+
 
 def build_session(app: str = "adscraper_spark", cpus: int | None = None,
                   shuffle_partitions: int | None = None) -> SparkSession:
@@ -38,6 +53,5 @@ def build_session(app: str = "adscraper_spark", cpus: int | None = None,
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         builder = (builder
                    .master(f"local[{cpus}]")
-                   .config("spark.driver.memory",
-                           os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")))
+                   .config("spark.driver.memory", driver_memory()))
     return builder.getOrCreate()

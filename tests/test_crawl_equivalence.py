@@ -247,9 +247,9 @@ def test_all_features_combined_matches_simulator(spark, corpus,
                                                  tmp_path_factory):
     """Every optional engine feature ON in one crawl — ad-landing
     admission, refresh-and-rescrape, cross-host expansion, periodic log
-    compaction + snapshot vacuum, the cuckoo seen-filter, multi-wave
-    checkpoint windows, and retries — must still be order/seen/state/
-    lineage-identical to the sequential simulator, and a crash mid
+    compaction + snapshot vacuum, multi-wave checkpoint windows, and
+    retries — must still be order/seen/state/lineage-identical to the
+    sequential simulator, and a crash mid
     checkpoint-window must resume to the identical crawl. Each pairwise
     interaction is covered elsewhere; this pins the full product (a
     regression that only appears when features compose — e.g. a landing
@@ -265,7 +265,7 @@ def test_all_features_combined_matches_simulator(spark, corpus,
                       max_depth=2, admit_ad_landings=True,
                       max_ad_landings_per_page=2, refresh_mains=True,
                       same_host_only=False, compact_every=2,
-                      vacuum_every=2, seen_filter="cuckoo",
+                      vacuum_every=2,
                       checkpoint_every=2, max_retries=2)
     pages_map = {r["url"]: r["html"] for r in pages_rows(corpus_spec)}
     pages_map.update({r["url"]: r["html"] for r in feed_rows(corpus_spec)})

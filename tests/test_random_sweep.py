@@ -3,14 +3,16 @@
 The fixed-config equivalence suite (test_crawl_equivalence.py) covers
 each feature and the all-on composition at corpus seed 42. This sweep
 draws WHOLE configurations — corpus shape, seed count, politeness
-budget, depth/wave/url caps, seen-filter kind, landings/refresh/retry
+budget, depth/wave/url caps, checkpoint cadence, landings/refresh/retry
 toggles, compaction/vacuum cadence, salt fanout — from a seeded RNG,
 so the engine is exercised at corpus/config points no hand-written
 test chose. Trials are deterministic in the trial seed (no flake); the
 three pinned here are the fastest of an 8-trial sweep that ran fully
-green (session log, round 5), chosen to jointly cover bloom+cuckoo,
-same_host both ways, max_urls caps, landings, refresh, retries>1,
-site budgets, and salt fanouts {1,4,16}.
+green (session log, round 5), chosen to jointly cover checkpoint
+windows, same_host both ways, max_urls caps, landings, refresh,
+retries>1, site budgets, and salt fanouts {1,4,16}. The draw that once
+picked the seen-filter kind is still taken (the seen set is bloom only
+now), so every trial keeps its corpus and config.
 """
 
 import random
@@ -35,11 +37,13 @@ def _draw(trial_seed: int):
         seed=rng.randint(0, 10**6),
         private_frac=rng.choice([0.0, 0.1, 0.3]),
         mega_host_weight=rng.choice([1.0, 4.0, 12.0]))
-    cfg = CrawlConfig(
-        wave_seconds=10, default_budget=rng.randint(1, 5),
+    head = dict(
+        default_budget=rng.randint(1, 5),
         max_waves=rng.randint(3, 8), max_depth=rng.randint(1, 3),
-        max_urls=rng.choice([None, 30, 100]),
-        seen_filter=rng.choice(["bloom", "cuckoo"]),
+        max_urls=rng.choice([None, 30, 100]))
+    rng.choice([0, 1])  # former filter-kind draw; keeps later draws pinned
+    cfg = CrawlConfig(
+        wave_seconds=10, **head,
         checkpoint_every=rng.randint(1, 3),
         same_host_only=rng.choice([True, False]),
         site_budget_seconds=rng.choice([None, 5.0]),
@@ -61,10 +65,12 @@ def _crash_draw(trial_seed: int):
         n_pages=rng.randint(80, 300), n_hosts=rng.randint(4, 12),
         seed=rng.randint(0, 10**6),
         private_frac=rng.choice([0.0, 0.2]))
+    head = dict(
+        default_budget=rng.randint(1, 4),
+        max_waves=rng.randint(4, 7), max_depth=rng.randint(2, 3))
+    rng.choice([0, 1])  # former filter-kind draw; keeps later draws pinned
     cfg = CrawlConfig(
-        wave_seconds=10, default_budget=rng.randint(1, 4),
-        max_waves=rng.randint(4, 7), max_depth=rng.randint(2, 3),
-        seen_filter=rng.choice(["bloom", "cuckoo"]),
+        wave_seconds=10, **head,
         checkpoint_every=rng.randint(1, 3),
         same_host_only=rng.choice([True, False]),
         max_retries=rng.randint(1, 2),
@@ -108,8 +114,8 @@ def test_random_crash_point_resume_matches_simulator(spark,
     append the resume must roll back), resume in a fresh engine, and
     the FINAL crawl must equal the uninterrupted simulator's. The two
     pinned trials are from a 10-trial sweep that ran fully green
-    (session log, round 5): one bloom/checkpoint_every=3 with the crash
-    inside an uncommitted window, one cuckoo/checkpoint_every=2."""
+    (session log, round 5): one checkpoint_every=3 with the crash
+    inside an uncommitted window, one checkpoint_every=2."""
     spec, cfg, n_seeds, crash_after = _crash_draw(trial_seed)
     seeds = [(i, u) for i, u in enumerate(gen_seeds(spec, n_seeds=n_seeds))]
     robots = [(spec.host_name(h), gen_robots_txt(spec, h))

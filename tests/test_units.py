@@ -1,5 +1,5 @@
 """Fast no-Spark units: urlnorm, robots, hashing, bloom, scheduler skew
-properties (hypothesis where it pays)."""
+properties (hypothesis where it pays), session defaults."""
 
 import string
 
@@ -148,6 +148,50 @@ def test_bloom_crash_tmp_file_ignored(tmp_path):
     (d / "wave-junk.npy").write_bytes(b"torn")  # unparseable stray
     seg = store.load_segment(0, 5)
     assert seg.might_contain("u1")
+
+
+def test_segment_saves_are_durable(tmp_path, monkeypatch):
+    """Segment saves must route their rename through
+    bloom.durable_replace (fsync data + dir): the engine folds the wave
+    manifest only AFTER the filter update, so a power loss that keeps
+    the manifest but tears the filter file would turn a durably-admitted
+    URL into a filter MISS — the false-negative direction the seen
+    filter must never err in."""
+    import adscraper_spark.bloom as bloom_mod
+
+    calls = []
+    real = bloom_mod.durable_replace
+
+    def spy(tmp, path):
+        calls.append(path)
+        real(tmp, path)
+
+    monkeypatch.setattr(bloom_mod, "durable_replace", spy)
+
+    bpath = str(tmp_path / "wave-0.npy")
+    bseg = BloomSegment.sized_for(100)
+    bseg.add("https://h.test/a")
+    bseg.save(bpath)
+    assert calls == [bpath]
+    assert BloomSegment.load(bpath).might_contain("https://h.test/a")
+
+
+def test_driver_memory_default_follows_physical_memory(monkeypatch):
+    """Unset SPARK_GRAFT_DRIVER_MEM → a quarter of physical memory,
+    capped at 48g, so two local JVMs fit on the machine together; a set
+    value still wins."""
+    from adscraper_spark import session
+
+    page = 4096
+    phys = {"SC_PAGE_SIZE": page}
+    monkeypatch.setattr(session.os, "sysconf", lambda name: phys[name])
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    phys["SC_PHYS_PAGES"] = 16 * 2**30 // page
+    assert session.driver_memory() == "4096m"
+    phys["SC_PHYS_PAGES"] = 1024 * 2**30 // page
+    assert session.driver_memory() == f"{48 * 1024}m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session.driver_memory() == "2g"
 
 
 def test_bench_compact_line_fits_driver_capture():
