@@ -19,6 +19,8 @@ import hashlib
 import os
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from .hashing import stable_hash64
 
@@ -30,6 +32,18 @@ DEFAULT_EXPECTED_KEYS = 100_000
 
 def partition_for_host(host: str, num_partitions: int) -> int:
     return stable_hash64("bloompart|" + (host or "")) % num_partitions
+
+
+def partition_col(host: Column, num_partitions: int) -> Column:
+    """``partition_for_host`` as a Spark expression, so keying rows by
+    segment needs no Python stage: the first 8 bytes of md5(8 zero
+    bytes ‖ utf-8 key) read as an unsigned 64-bit int (hex → decimal),
+    taken modulo ``num_partitions``."""
+    key = F.concat(F.unhex(F.lit("00" * 8)),
+                   F.encode(F.concat(F.lit("bloompart|"),
+                                     F.coalesce(host, F.lit(""))), "UTF-8"))
+    h = F.conv(F.substring(F.md5(key), 1, 16), 16, 10)
+    return (h.cast("decimal(20,0)") % F.lit(num_partitions)).cast("int")
 
 
 def _hash_pair(url: str) -> tuple[int, int]:

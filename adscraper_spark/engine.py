@@ -11,11 +11,14 @@ scheduling WAVES; each wave is one declarative Spark plan:
       never shuffles (size-gated, shuffle fallback)       (J7/S6)
     → vectorized extraction UDF on the fetch join's own
       partitioning (no exchange of the html)              (extraction/)
-    → link candidates → normalize → same-host filter (F4)
-      → robots gate → in-wave dedup → bloom pre-filter    (bloom.py)
+    → link + ad-landing candidates → ONE Arrow pass: normalize
+      + seen-filter probe as of this wave                 (bloom.py)
+      → same-host filter (F4) → in-wave dedup
       → exact anti-join vs admitted log, bloom hits only  (J5/Z3)
+      → finish pass: robots gate + lineage columns
     → one commit: processed+admitted+results+ads+requests appends,
-      bloom segments, wave manifest (the atomic commit point, Z4).
+      bloom segments (keyed in the JVM, one grouped Python stage),
+      wave manifest (the atomic commit point, Z4).
 
 Exactly-once admission: a URL row lands in the ``admitted`` log exactly
 once because candidate admission anti-joins the log inside the same wave
@@ -31,7 +34,9 @@ by url (SnapshotTable bucket_col — the Iceberg bucket(N, url) transform
 analog): stable skew-free file layout here, and under real Iceberg the
 matching transform makes the per-wave anti-join co-partitioned (plain
 parquet reads drop distribution metadata, so local mode still pays the
-exchange).
+exchange). The engine's own wave appends write the logs at core width
+(a divisor of frontier_buckets, store.core_width) — one write task per
+core for a few hundred rows — and compaction rewrites them full width.
 """
 
 from __future__ import annotations
@@ -46,15 +51,14 @@ from concurrent.futures import ThreadPoolExecutor
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .bloom import BloomStore, partition_for_host
+from .bloom import BloomStore, partition_col, partition_for_host
 from .config import DISCOVERED_SEQ_BASE, CrawlConfig  # noqa: F401
 from .corpus_layout import bucket_id_col, corpus_layout, prune_buckets
 from .extraction.udfs import extract_pages
 from .hashing import stable_hash64
 from .scheduler import plan_wave
-from .store import CommitError, SnapshotTable
+from .store import CommitError, SnapshotTable, core_width
 from .urlnorm import normalize_url, url_host, url_path
 
 
@@ -179,6 +183,11 @@ class CrawlEngine:
         self.processed = SnapshotTable(os.path.join(workdir, "processed"),
                                        bucket_col="url",
                                        num_buckets=buckets)
+        # File width of the engine's own log appends (a wave's few
+        # hundred rows): one write task per core, not one per bucket.
+        # compact() rewrites the logs at the full bucket count.
+        self._log_width = core_width(
+            buckets, spark.sparkContext.defaultParallelism)
         # Analysis tables carry manifest min/max bounds (Iceberg
         # manifest-entry lower/upper bounds analog, store.py): every
         # wave appends with a literal `wave`, so each data dir's bound
@@ -602,7 +611,7 @@ class CrawlEngine:
         uniq = self._seed_rows(seeds, wave_admitted=0)
         df = self._gated_seed_df(uniq).cache()
         n = df.count()
-        self.admitted.append(df)
+        self.admitted.append(df, width=self._log_width)
         self._update_bloom_distributed(df, 0)
         df.unpersist()
         self._append_crawl_event("bootstrapped", wave=0, n_seeds=n)
@@ -729,7 +738,7 @@ class CrawlEngine:
                     or self.admitted.current_snapshot_id() != gate_base):
                 diverted = True
             else:
-                sid = self.admitted.append(gated)
+                sid = self.admitted.append(gated, width=self._log_width)
                 # Fold ONLY the admitted-log advance into the latest
                 # manifest, pinning the snapshot id THIS append
                 # returned — re-reading HEAD could capture a later
@@ -834,7 +843,7 @@ class CrawlEngine:
             self._first_occurrence(staged)).cache()
         n = int(staged.count())
         if n:
-            self.admitted.append(staged)
+            self.admitted.append(staged, width=self._log_width)
             self._update_bloom_distributed(staged, wave)
         staged.unpersist()
         self._last_drained_id = cur
@@ -937,8 +946,9 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
     def _segment_map(self, rows: DataFrame, wave: int) -> None:
-        """Key (url, host) rows by bloom partition, then add each
-        partition's URLs to its segment in its own executor task. No URL
+        """Key (url, host) rows by bloom partition in the JVM
+        (``partition_col``), then add each partition's URLs to its
+        segment in its own executor task — one Python stage. No URL
         list ever reaches the driver (the 10^10-scale requirement,
         SURVEY §7.3). The name is kept apart from
         ``_update_bloom_distributed``: perfbench/tracing.py attributes
@@ -952,12 +962,8 @@ class CrawlEngine:
                 p, wave, pdf["url"].tolist())
             return pd.DataFrame({"bpart": [p], "n": [len(pdf)]})
 
-        keyed = rows.select("url", "host").mapInPandas(
-            lambda it: (pd.DataFrame({
-                "url": pdf["url"],
-                "bpart": [partition_for_host(h or "", nparts)
-                          for h in pdf["host"]]}) for pdf in it),
-            schema="url string, bpart int")
+        keyed = rows.select(
+            "url", partition_col(F.col("host"), nparts).alias("bpart"))
         keyed.groupBy("bpart").applyInPandas(
             apply, schema="bpart int, n long").collect()  # 1 row/part
 
@@ -966,34 +972,6 @@ class CrawlEngine:
         """Per-partition segment update on executors: each group task
         loads its segment, adds its URLs, writes the next wave's file."""
         self._segment_map(admissions, wave)
-
-    def _bloom_prefilter(self, cand: DataFrame, wave: int) -> DataFrame:
-        """Split candidates into definitely-new (bloom miss → admit without
-        the expensive anti-join) vs maybe-seen (bloom hit → exact
-        anti-join). Correctness does not depend on the bloom (SURVEY §4.2).
-        """
-        bloom_root = self.bloom.root
-        nparts = self.config.bloom_partitions
-
-        def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            store = BloomStore(bloom_root, nparts)
-            cache: dict[int, object] = {}
-            for pdf in batches:
-                hits = []
-                for host, url in zip(pdf["host"], pdf["url"]):
-                    p = partition_for_host(host or "", nparts)
-                    seg = cache.get(p)
-                    if seg is None:
-                        seg = store.load_segment(p, wave)
-                        cache[p] = seg
-                    hits.append(seg.might_contain(url))
-                out = pdf.copy()
-                out["maybe_seen"] = hits
-                yield out
-
-        schema = T.StructType(cand.schema.fields + [
-            T.StructField("maybe_seen", T.BooleanType())])
-        return cand.mapInPandas(probe, schema=schema)
 
     # ------------------------------------------------------------------
     def run_wave(self, wave: int, commit: bool = True) -> dict:
@@ -1225,8 +1203,8 @@ class CrawlEngine:
             """Build + materialize this wave's admissions; returns
             (admissions_df, n_admitted, n_disallowed). Called from the
             commit block below so its chain of jobs (link explode →
-            norm UDF → dedup → bloom probe → anti-join → finish UDF →
-            stats collect) OVERLAPS the five result-table appends
+            norm+probe UDF → dedup → anti-join → finish UDF → stats
+            collect) OVERLAPS the five result-table appends
             (guide §2.6: concurrent jobs back-fill each other's task
             tails) — everything both sides read is already
             materialized in the extraction/fetch caches, so the
@@ -1245,22 +1223,40 @@ class CrawlEngine:
                 .filter((F.col("depth") < cfg.max_depth)
                         & F.col("src_ad_id").isNull())
             )
-            norm_schema = ("src_url string, src_host string, depth int, "
-                           "link string, url string, host string, "
-                           "path string")
-            cand = exp_src.select(
+            bloom_root = self.bloom.root
+            nparts = self.config.bloom_partitions
+
+            def norm_probe(batches: Iterator[pd.DataFrame]
+                           ) -> Iterator[pd.DataFrame]:
+                """One Python pass per candidate: normalize the link,
+                then probe the seen filter as of ``wave``. The probe
+                reads only the url (and its host), so running it before
+                the dedup gives each url the answer it would get after."""
+                store = BloomStore(bloom_root, nparts)
+                segs: dict[int, object] = {}
+                for out in _norm_batches(batches):
+                    hits = []
+                    for host, url in zip(out["host"], out["url"]):
+                        if url is None:
+                            hits.append(False)  # dropped below
+                            continue
+                        p = partition_for_host(host or "", nparts)
+                        seg = segs.get(p)
+                        if seg is None:
+                            seg = segs[p] = store.load_segment(p, wave)
+                        hits.append(seg.might_contain(url))
+                    out["maybe_seen"] = hits
+                    yield out
+
+            # links: kind 0, no referrer ad (sentinel -1 keeps the
+            # dedup struct null-free)
+            raw = exp_src.select(
                 F.col("url").alias("src_url"),
                 F.col("host").alias("src_host"),
                 F.col("depth"),
-                F.explode("links").alias("link"))
-            cand = cand.mapInPandas(_norm_batches, schema=norm_schema)
-            cand = cand.filter(F.col("url").isNotNull())
-            if cfg.same_host_only:  # F4
-                cand = cand.filter(F.col("host") == F.col("src_host"))
-            # links: kind 0, no referrer ad (sentinel -1 keeps the
-            # dedup struct null-free)
-            cand = (cand.withColumn("kind", F.lit(0))
-                    .withColumn("cand_ad_id", F.lit(-1).cast("long")))
+                F.explode("links").alias("link"),
+                F.lit(0).alias("kind"),
+                F.lit(-1).cast("long").alias("cand_ad_id"))
             if cfg.admit_ad_landings and cfg.max_ad_landings_per_page:
                 # J4: first anchor of the first K ads-with-anchors per
                 # page, in ad_index order (the per-page click cap,
@@ -1280,31 +1276,37 @@ class CrawlEngine:
                     .select("src_url", "src_host", "depth",
                             F.element_at("ad.anchor_hrefs", 1)
                             .alias("link"),
+                            F.lit(1).alias("kind"),
                             F.col("ad.ad_id").alias("cand_ad_id")))
-                landing = (landing
-                           .mapInPandas(_norm_batches,
-                                        schema=norm_schema
-                                        + ", cand_ad_id long")
-                           .filter(F.col("url").isNotNull())
-                           .withColumn("kind", F.lit(1)))
-                cand = cand.unionByName(landing)
+                raw = raw.unionByName(landing)
+            cand = raw.mapInPandas(
+                norm_probe,
+                schema="src_url string, src_host string, depth int, "
+                       "link string, url string, host string, "
+                       "path string, kind int, cand_ad_id long, "
+                       "maybe_seen boolean")
+            cand = cand.filter(F.col("url").isNotNull())
+            if cfg.same_host_only:  # F4; landings are exempt
+                cand = cand.filter((F.col("kind") == 1)
+                                   | (F.col("host") == F.col("src_host")))
             # in-wave dedup with deterministic lineage: min (depth,
             # kind, src, ad) — links beat landings at equal depth; the
-            # simulator takes the same tuple min
+            # simulator takes the same tuple min. maybe_seen is a
+            # function of the url, so keying on it splits no group.
+            # cache: the fresh/maybe split consumes this lineage twice,
+            # and without the cache the norm+probe UDF re-runs on both
+            # branches
             cand = (
-                cand.groupBy("url", "host", "path")
+                cand.groupBy("url", "host", "path", "maybe_seen")
                 .agg(F.min(F.struct("depth", "kind", "src_url",
                                     "cand_ad_id")).alias("m"))
                 .select("url", "host", "path",
                         F.col("m.depth").alias("src_depth"),
                         F.col("m.kind").alias("kind"),
                         F.col("m.src_url").alias("src_url"),
-                        F.col("m.cand_ad_id").alias("cand_ad_id"))
-            )
-            # cache: the fresh/maybe split consumes this lineage twice
-            # (explode → norm UDF → dedup shuffle → bloom probe), and
-            # without the cache the probe UDF re-runs on both branches
-            cand = self._bloom_prefilter(cand, wave).cache()
+                        F.col("m.cand_ad_id").alias("cand_ad_id"),
+                        "maybe_seen")
+            ).cache()
             fresh = cand.filter(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = cand.filter(F.col("maybe_seen")).drop("maybe_seen")
             admitted_urls = self._admitted_urls_for(maybe)
@@ -1379,19 +1381,21 @@ class CrawlEngine:
         # job has finished, and rollback discards any snapshot not
         # pinned by a wave manifest (orphan bloom bits are safe: bloom
         # hits fall through to the exact anti-join).
-        appends = [(self.processed, processed_df),
-                   (self.results, results_df),
+        appends = [(self.results, results_df),
                    (self.ads, ads_df),
                    (self.requests, requests_df),
                    (self.iframes, iframes_df)]
         _t_persist = _time.time()
-        with ThreadPoolExecutor(max_workers=len(appends) + 3) as pool:
-            futs = [pool.submit(table.append, df) for table, df in appends]
+        with ThreadPoolExecutor(max_workers=len(appends) + 4) as pool:
+            futs = [pool.submit(self.processed.append, processed_df,
+                                width=self._log_width)]
+            futs += [pool.submit(table.append, df) for table, df in appends]
             count_fut = pool.submit(fetched.count)
             admissions_df, n_admitted, n_disallowed = run_admission()
             adm_fut = bloom_fut = None
             if admissions_df is not None:
-                adm_fut = pool.submit(self.admitted.append, admissions_df)
+                adm_fut = pool.submit(self.admitted.append, admissions_df,
+                                      width=self._log_width)
                 bloom_fut = pool.submit(
                     self._update_bloom_distributed, admissions_df,
                     wave + 1)

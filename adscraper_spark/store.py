@@ -5,7 +5,9 @@ SURVEY.md §1.1/§4); this container has no Iceberg runtime jars and no
 network, so we implement the same commit contract directly:
 
 - a table = directory of immutable parquet data files + numbered
-  manifest JSONs (``snap-N.json`` listing live data files + properties);
+  manifest JSONs (``snap-N.json`` listing live data files, properties
+  and the read schema they share — reads pass it to Spark instead of
+  starting a schema-inference job);
 - a commit writes new data files, writes ``snap-(N+1).json``, then
   atomically publishes it via ``os.rename`` onto ``HEAD`` — readers see
   the old or the new snapshot, never a torn state;
@@ -27,7 +29,8 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import types as T
 
 
 def _json_stat(v):
@@ -98,7 +101,45 @@ VACUUM_RETAIN_LAST = int(
 #: Per-data-dir bucket-layout marker (underscore prefix: Spark's file
 #: index ignores it). See SnapshotTable._write_data / read_bucket_subset.
 _BUCKET_MARKER = "_bucket_layout.json"
+#: Marker layout version: 2 = ``n`` is the dir's own file count (a
+#: divisor of the table's num_buckets), plus the writer's Spark version.
+_LAYOUT_VERSION = 2
 _PART_RE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def core_width(num_buckets: int, parallelism: int) -> int:
+    """File count for a small bucketed append: ``num_buckets`` halved
+    while it exceeds ``parallelism`` and stays even — so it always
+    divides ``num_buckets``. A wave's log append of a few hundred rows
+    then launches about one write task per core instead of one per
+    bucket."""
+    w = num_buckets
+    while w > parallelism and w % 2 == 0:
+        w //= 2
+    return w
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — the schema
+    Spark reports when it reads back the parquet it wrote."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType),
+                                           True, f.metadata)
+                             for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType),
+                         True)
+    return dt
+
+
+def _agreed(schemas: list) -> dict | None:
+    """The one schema every listed write shares; None when any is
+    unknown (None) or two disagree, or when the list is empty."""
+    if not schemas or any(s != schemas[0] for s in schemas):
+        return None
+    return schemas[0]
 
 
 @dataclass
@@ -112,6 +153,10 @@ class Snapshot:
     # row group in every part file carried footer min/max); absent ⇒
     # unknown ⇒ a pruning read must keep the dir.
     stats: dict = None  # type: ignore[assignment]
+    # read schema (StructType JSON) shared by every listed data dir —
+    # Iceberg's table-metadata schema analog. None = unknown (a legacy
+    # manifest, or appends that disagree): reads infer it instead.
+    schema: dict | None = None
 
     def __post_init__(self):
         if self.stats is None:
@@ -195,7 +240,7 @@ class SnapshotTable:
         with open(os.path.join(self.path, "meta", f"snap-{sid}.json")) as f:
             doc = json.load(f)
         return Snapshot(sid, doc["files"], doc.get("properties", {}),
-                        doc.get("stats", {}))
+                        doc.get("stats", {}), doc.get("schema"))
 
     def snapshots(self) -> list[int]:
         out = []
@@ -206,7 +251,8 @@ class SnapshotTable:
 
     def _publish(self, files: list[str], properties: dict,
                  expected_parent: int,
-                 stats: dict | None = None) -> int:
+                 stats: dict | None = None,
+                 schema: dict | None = None) -> int:
         """Optimistic-concurrency commit: fails if HEAD moved since the
         caller read it (Iceberg's compare-and-swap semantics). The CAS
         is the EXCLUSIVE CREATE of the snapshot manifest — a plain
@@ -230,6 +276,8 @@ class SnapshotTable:
             # bounds only for dirs this snapshot still lists (keys are
             # data-dir paths, so a replace drops stale entries for free)
             doc["stats"] = {p: s for p, s in stats.items() if p in set(files)}
+        if schema is not None:
+            doc["schema"] = schema
         with open(tmp, "w") as fh:
             json.dump(doc, fh)
             fh.flush()
@@ -303,24 +351,38 @@ class SnapshotTable:
         return True
 
     # -- data ---------------------------------------------------------------
-    def _write_data(self, df: DataFrame) -> list[str]:
+    def _write_data(self, df: DataFrame, width: int | None = None
+                    ) -> tuple[list[str], dict]:
+        """Write one data dir; returns ([dir], its read schema).
+
+        Bucketed tables write ``width`` files (default ``num_buckets``;
+        it must divide ``num_buckets``): file ``part-K`` holds exactly
+        the rows with ``pmod(murmur3(bucket_col), num_buckets) ≡ K (mod
+        width)``. A narrow write keeps every bucket whole inside one
+        file, so read_bucket_subset still prunes it, at ``width``
+        granularity."""
         part = os.path.join(self.path, "data", uuid.uuid4().hex)
+        schema = _nullable(df.schema).jsonValue()
         if self.bucket_col is not None and self.bucket_col in df.columns:
-            df = df.repartition(self.num_buckets, self.bucket_col)
+            width = self.num_buckets if width is None else width
+            if width < 1 or self.num_buckets % width:
+                raise ValueError(f"width {width} does not divide "
+                                 f"num_buckets {self.num_buckets}")
+            df = df.repartition(width, self.bucket_col)
             df.write.mode("overwrite").parquet(part)
             # Per-dir layout marker (leading underscore → invisible to
             # Spark's file index): records that THIS dir's part-file
-            # indices are pmod(murmur3(bucket_col), num_buckets) —
+            # indices are pmod(murmur3(bucket_col), width) —
             # repartition's HashPartitioning assigns partition (and
             # thus part-NNNNN file) exactly that way, verified in
-            # tests. read_bucket_subset prunes only dirs whose marker
-            # matches its expectation, so dirs written under an older
-            # bucket count (or never bucketed) are always read whole.
+            # tests. The writer's Spark version rides along: the hash
+            # is Spark's, so only a reader on the same version trusts
+            # the file indices.
             with open(os.path.join(part, _BUCKET_MARKER), "w") as f:
-                json.dump({"col": self.bucket_col,
-                           "n": self.num_buckets,
-                           "hash": "murmur3"}, f)
-            return [part]
+                json.dump({"col": self.bucket_col, "n": width,
+                           "hash": "murmur3", "v": _LAYOUT_VERSION,
+                           "spark": df.sparkSession.version}, f)
+            return [part], schema
         else:
             # Cap file count (and write-task count) at the session's
             # parallelism: wave appends inherit the corpus scan's split
@@ -331,7 +393,15 @@ class SnapshotTable:
             par = df.sparkSession.sparkContext.defaultParallelism
             df = df.coalesce(max(1, par))
         df.write.mode("overwrite").parquet(part)
-        return [part]
+        return [part], schema
+
+    @staticmethod
+    def _reader(spark: SparkSession, snap: Snapshot) -> DataFrameReader:
+        """Reader for ``snap``'s files: with its recorded schema when it
+        has one (no schema-inference job), else inferring it."""
+        if snap.schema is None:
+            return spark.read
+        return spark.read.schema(T.StructType.fromJson(snap.schema))
 
     def _footer_stats(self, dirs: list[str]) -> dict:
         """Min/max bounds per data dir for ``stats_cols``, read from
@@ -403,22 +473,26 @@ class SnapshotTable:
                 out[d] = stats
         return out
 
-    def append(self, df: DataFrame, properties: dict | None = None) -> int:
+    def append(self, df: DataFrame, properties: dict | None = None,
+               width: int | None = None) -> int:
         """Appends are commutative, so a lost CAS retries against the
         new HEAD with the already-written data files (Iceberg's
         commit.retry semantics) — concurrent appenders to the same
-        table (streamed seed intake vs the wave loop) both land."""
-        files = self._write_data(df)
+        table (streamed seed intake vs the wave loop) both land.
+        ``width``: file count of a bucketed write (see _write_data)."""
+        files, schema = self._write_data(df, width)
         new_stats = self._footer_stats(files)
         last_err: CommitError | None = None
         for attempt in range(5):
             snap = self.snapshot()
             props = dict(snap.properties)
             props.update(properties or {})
+            prior = [] if snap.empty else [snap.schema]
             try:
                 return self._publish(snap.files + files, props,
                                      snap.snapshot_id,
-                                     stats={**snap.stats, **new_stats})
+                                     stats={**snap.stats, **new_stats},
+                                     schema=_agreed(prior + [schema]))
             except CommitError as e:
                 last_err = e
                 # Back off until HEAD advances past the parent we lost
@@ -437,9 +511,10 @@ class SnapshotTable:
 
     def overwrite(self, df: DataFrame, properties: dict | None = None) -> int:
         snap = self.snapshot()
-        files = self._write_data(df)
+        files, schema = self._write_data(df)
         return self._publish(files, properties or {}, snap.snapshot_id,
-                             stats=self._footer_stats(files))
+                             stats=self._footer_stats(files),
+                             schema=schema)
 
     def commit_multi(self, appends: list[DataFrame] | None = None,
                      replace_with: DataFrame | None = None,
@@ -448,18 +523,22 @@ class SnapshotTable:
         'results append + frontier state merge' transaction, SURVEY §4.3).
         """
         snap = self.snapshot()
-        files = [] if replace_with is not None else list(snap.files)
+        keep_old = replace_with is None and not snap.empty
+        files = list(snap.files) if keep_old else []
+        schemas = [snap.schema] if keep_old else []
         new_dirs: list[str] = []
-        if replace_with is not None:
-            new_dirs.extend(self._write_data(replace_with))
-        for df in appends or []:
-            new_dirs.extend(self._write_data(df))
+        for df in ([replace_with] if replace_with is not None else []) \
+                + list(appends or []):
+            dirs, schema = self._write_data(df)
+            new_dirs.extend(dirs)
+            schemas.append(schema)
         files.extend(new_dirs)
         props = dict(snap.properties)
         props.update(properties or {})
         stats = {} if replace_with is not None else dict(snap.stats)
         stats.update(self._footer_stats(new_dirs))
-        return self._publish(files, props, snap.snapshot_id, stats=stats)
+        return self._publish(files, props, snap.snapshot_id, stats=stats,
+                             schema=_agreed(schemas))
 
     def compact(self, spark: SparkSession,
                 properties: dict | None = None) -> int | None:
@@ -474,13 +553,14 @@ class SnapshotTable:
         snap = self.snapshot()
         if len(snap.files) <= 1:
             return None
-        df = spark.read.parquet(*snap.files)
+        df = self._reader(spark, snap).parquet(*snap.files)
         props = dict(snap.properties)
         props.update(properties or {})
         props["compacted_from_files"] = len(snap.files)
-        files = self._write_data(df)
+        files, schema = self._write_data(df)
         return self._publish(files, props, snap.snapshot_id,
-                             stats=self._footer_stats(files))
+                             stats=self._footer_stats(files),
+                             schema=schema)
 
     def read(self, spark: SparkSession,
              snapshot_id: int | None = None,
@@ -499,7 +579,7 @@ class SnapshotTable:
             files = self._prune_files(snap, *where)
             if not files:
                 return None
-        df = spark.read.parquet(*files)
+        df = self._reader(spark, snap).parquet(*files)
         if where is not None:
             col, lo, hi = where
             if lo is not None:
@@ -511,19 +591,24 @@ class SnapshotTable:
     def read_bucket_subset(self, spark: SparkSession, bucket_ids,
                            snapshot_id: int | None = None
                            ) -> DataFrame | None:
-        """Read only the bucket files matching ``bucket_ids`` — the
+        """Read only the bucket files that can hold ``bucket_ids`` — the
         Iceberg bucket-transform scan-planning analog for this table's
-        ``repartition(num_buckets, bucket_col)`` layout, where file
-        ``part-K-*`` of a bucketed data dir holds exactly the rows with
-        ``pmod(murmur3(bucket_col), num_buckets) == K``.
+        layout. A data dir written ``w`` wide (see _write_data; ``w``
+        divides ``num_buckets``) keeps bucket ``b`` in file
+        ``part-(b % w)``, so the read opens files ``{b % w}``: exactly
+        the selected buckets for a full-width dir, and whole buckets
+        around them for a narrow one (a superset — callers filter or
+        anti-join, never count).
 
         Per-dir safety: a dir is pruned ONLY when its `_bucket_layout`
-        marker matches this table's (col, num_buckets) — dirs written
-        unbucketed or under a different bucket count are included
-        whole, so a config change or legacy layout degrades to the
-        full read, never to wrong pruning. Returns None when the
-        snapshot is empty or the selected subset holds no files; on
-        any listing error falls back to the plain read."""
+        marker has this table's column, the murmur3 hash, layout
+        version 2, this session's Spark version, and a width dividing
+        ``num_buckets``. Any other dir (unbucketed, legacy marker,
+        another Spark, another bucket count) is read whole, so a config
+        change or legacy layout degrades to the full read, never to
+        wrong pruning. Returns None when the snapshot is empty or the
+        selected subset holds no files; on any listing error falls
+        back to the plain read."""
         snap = self.snapshot(snapshot_id)
         if snap.empty:
             return None
@@ -531,18 +616,11 @@ class SnapshotTable:
         paths: list[str] = []
         try:
             for d in snap.files:
-                marker = None
-                try:
-                    with open(os.path.join(d, _BUCKET_MARKER)) as f:
-                        marker = json.load(f)
-                except (OSError, ValueError):
-                    marker = None
-                if (marker is None
-                        or marker.get("col") != self.bucket_col
-                        or marker.get("n") != self.num_buckets
-                        or marker.get("hash") != "murmur3"):
+                width = self._prune_width(d, spark.version)
+                if width is None:
                     paths.append(d)  # unprunable dir: read it whole
                     continue
+                files = {b % width for b in want}
                 for name in sorted(os.listdir(d)):
                     m = _PART_RE.match(name)
                     if m is None:
@@ -550,13 +628,33 @@ class SnapshotTable:
                             # unexpected layout: read the file anyway
                             paths.append(os.path.join(d, name))
                         continue
-                    if int(m.group(1)) in want:
+                    if int(m.group(1)) in files:
                         paths.append(os.path.join(d, name))
         except OSError:
             return self.read(spark, snapshot_id)
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return self._reader(spark, snap).parquet(*paths)
+
+    def _prune_width(self, data_dir: str, spark_version: str) -> int | None:
+        """The file width to prune ``data_dir`` at, from its layout
+        marker; None when the marker is missing or does not prove this
+        table's bucket layout (see read_bucket_subset)."""
+        try:
+            with open(os.path.join(data_dir, _BUCKET_MARKER)) as f:
+                marker = json.load(f)
+        except (OSError, ValueError):
+            return None
+        if not isinstance(marker, dict):
+            return None
+        n = marker.get("n")
+        if (marker.get("v") != _LAYOUT_VERSION
+                or marker.get("spark") != spark_version
+                or marker.get("col") != self.bucket_col
+                or marker.get("hash") != "murmur3"
+                or type(n) is not int or n < 1 or self.num_buckets % n):
+            return None
+        return n
 
     def _prune_files(self, snap: Snapshot, col: str, lo, hi) -> list[str]:
         import datetime
@@ -706,7 +804,7 @@ class SnapshotTable:
         new = [f for f in head.files if f not in base]
         if not new:
             return None
-        return spark.read.parquet(*new)
+        return self._reader(spark, head).parquet(*new)
 
     def properties(self) -> dict:
         return self.snapshot().properties

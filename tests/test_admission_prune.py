@@ -4,8 +4,11 @@ log's bucket files matching the candidates' url-hash bucket set, and
 the pruned engine remains byte-equivalent to the sequential simulator.
 """
 
+import json
+import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from adscraper_spark.config import CrawlConfig
@@ -14,30 +17,77 @@ from adscraper_spark.engine import CrawlEngine
 from adscraper_spark.store import SnapshotTable
 
 
-def test_read_bucket_subset_equals_filtered_full_read(spark, tmp_path):
-    n_buckets = 8
-    t = SnapshotTable(str(tmp_path / "t"), bucket_col="url",
-                      num_buckets=n_buckets)
-    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+def _urls(spark, lo, hi):
+    return spark.range(lo, hi).select(
         F.concat(F.lit("https://h"), (F.col("id") % 13).cast("string"),
                  F.lit(".test/p/"), F.col("id").cast("string"))
         .alias("url"),
         F.col("id").alias("seq"))
-    t.append(mk(0, 500))
-    t.append(mk(500, 900))  # second data dir — prune spans appends
-    want = {1, 4, 6}
+
+
+@pytest.mark.parametrize("width", [8, 4, 2])
+def test_read_bucket_subset_equals_filtered_full_read(spark, tmp_path,
+                                                      width):
+    """Full-width dirs prune to exactly the wanted buckets; a dir
+    written ``width`` wide (a divisor of num_buckets) prunes to the
+    files ``{b % width}``, i.e. to whole residue classes of buckets."""
+    n_buckets = 8
+    t = SnapshotTable(str(tmp_path / "t"), bucket_col="url",
+                      num_buckets=n_buckets)
+    t.append(_urls(spark, 0, 500), width=width)
+    # second data dir — prune spans appends
+    t.append(_urls(spark, 500, 900), width=width)
+    want = {1, 3, 5}
+    files = {b % width for b in want}
     sub = t.read_bucket_subset(spark, want)
     got = sorted(r["url"] for r in sub.collect())
     full = t.read(spark)
     exp = sorted(r["url"] for r in full.filter(
-        F.pmod(F.hash("url"), F.lit(n_buckets)).isin(list(want)))
-        .collect())
+        F.pmod(F.pmod(F.hash("url"), F.lit(n_buckets)), F.lit(width))
+        .isin(list(files))).collect())
     assert got == exp and got  # identical rows, non-empty
-    # the subset scan opens only the selected bucket files: ≤ |want|
-    # per data dir, and strictly fewer files than the full read
+    # the subset scan opens only the selected files: ≤ |files| per
+    # data dir, and strictly fewer files than the full read
     sub_files = sub.inputFiles()
-    assert len(sub_files) <= len(want) * 2
+    assert len(sub_files) <= len(files) * 2
     assert len(sub_files) < len(full.inputFiles())
+
+
+def test_narrow_append_rejects_non_divisor_width(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"), bucket_col="url", num_buckets=8)
+    with pytest.raises(ValueError):
+        t.append(_urls(spark, 0, 10), width=3)
+
+
+@pytest.mark.parametrize("change", [
+    {"v": None},              # legacy marker: no layout version
+    {"v": 1},                 # another layout version
+    {"spark": "0.0.1"},       # written by another Spark (hash may differ)
+    {"n": 3},                 # width does not divide num_buckets
+    {"n": 16},                # wider than the table's bucket count
+    {"hash": "xxhash64"},
+    {"col": "seq"},
+])
+def test_read_bucket_subset_refuses_unproven_marker(spark, tmp_path,
+                                                    change):
+    """A dir whose marker does not prove this table's layout is read
+    whole — never pruned by a layout it might not have."""
+    t = SnapshotTable(str(tmp_path / "t"), bucket_col="url", num_buckets=8)
+    t.append(_urls(spark, 0, 300), width=4)
+    (d,) = t.snapshot().files
+    path = os.path.join(d, "_bucket_layout.json")
+    with open(path) as f:
+        marker = json.load(f)
+    assert marker["v"] == 2 and marker["n"] == 4
+    assert marker["spark"] == spark.version
+    marker.update(change)
+    if marker["v"] is None:
+        del marker["v"], marker["spark"]
+    with open(path, "w") as f:
+        json.dump(marker, f)
+    sub = t.read_bucket_subset(spark, {0})
+    assert sorted(r["url"] for r in sub.collect()) == sorted(
+        r["url"] for r in t.read(spark).collect())
 
 
 def test_read_bucket_subset_refuses_foreign_layout(spark, tmp_path):
@@ -65,7 +115,9 @@ def test_read_bucket_subset_refuses_foreign_layout(spark, tmp_path):
 def test_pruned_engine_matches_simulator(spark, corpus, corpus_spec,
                                          seeds, robots_rows):
     """Force pruning from the first wave (min_rows=1): crawl order and
-    seen set must stay identical to the sequential oracle."""
+    seen set must stay identical to the sequential oracle. The test
+    session has fewer cores than frontier_buckets, so the wave appends
+    are narrow dirs and the prune crosses them at their width."""
     from adscraper_spark.simulator import simulate_crawl
 
     cfg = CrawlConfig(wave_seconds=10, default_budget=3, max_waves=8,
@@ -74,7 +126,22 @@ def test_pruned_engine_matches_simulator(spark, corpus, corpus_spec,
     sim = simulate_crawl(pages, seeds, robots_rows, cfg)
     work = tempfile.mkdtemp(prefix="prune_engine_")
     eng = CrawlEngine(spark, corpus["pages"], corpus["robots"], work, cfg)
+    assert eng._log_width < cfg.frontier_buckets
     eng.bootstrap(seeds)
     eng.run()
     assert eng.crawl_order() == sim.order
     assert eng.seen_set() == sim.seen
+
+
+def test_core_width_divides_bucket_count():
+    from adscraper_spark.store import core_width
+
+    assert core_width(32, 4) == 4
+    assert core_width(32, 8) == 8
+    assert core_width(32, 64) == 32
+    assert core_width(24, 5) == 3
+    assert core_width(7, 2) == 7  # odd: cannot halve, stays whole
+    for n in (1, 6, 8, 12, 32, 512):
+        for par in (1, 2, 3, 4, 7, 8, 32):
+            w = core_width(n, par)
+            assert n % w == 0 and (w <= par or w % 2 or w == n)

@@ -453,3 +453,87 @@ def test_near_dup_pair_expansion_streams_not_mega_row(spark):
     threshold = re.escape(str(similarity.NEAR_DUP_LSH_THRESHOLD))
     assert re.search(rf"Filter \(round\(cos_raw#\d+, 4\) >= {threshold}\)",
                      plan), plan
+
+
+def _python_nodes(df, kind: str) -> set[str]:
+    """Distinct ``kind`` plan nodes of ``df``, cached sub-plans included
+    (a cache read twice prints its plan twice: same node, same text)."""
+    return {ln.strip(" :+-") for ln in _plan(df).splitlines()
+            if re.search(rf"\b{kind} ", ln)}
+
+
+def test_admission_chain_crosses_into_python_twice(spark, tmp_path,
+                                                   monkeypatch, corpus,
+                                                   seeds):
+    """An admitting wave's admission plan (links + ad landings) holds
+    exactly two MapInPandas nodes of its own: the fused link
+    normalize+seen-filter probe, and the finish/robots pass. Nodes of
+    the extraction and planning caches it reads are not counted."""
+    import adscraper_spark.engine as eng_mod
+    from adscraper_spark.config import CrawlConfig
+
+    cfg = CrawlConfig(wave_seconds=10, default_budget=3, max_waves=3,
+                      max_depth=2, admit_ad_landings=True)
+    eng = eng_mod.CrawlEngine(spark, corpus["pages"], corpus["robots"],
+                              str(tmp_path / "w"), cfg)
+    eng.bootstrap(seeds)
+    inputs = []
+
+    def recording(fn):
+        def wrapper(*a, **k):
+            inputs.append(fn(*a, **k))
+            return inputs[-1]
+        return wrapper
+
+    for name in ("extract_pages", "plan_wave"):
+        monkeypatch.setattr(eng_mod, name, recording(getattr(eng_mod, name)))
+    seen = {}
+    append = eng.admitted.append
+
+    def spy(df, *a, **k):
+        seen["admission"] = _python_nodes(df, "MapInPandas")
+        return append(df, *a, **k)
+
+    monkeypatch.setattr(eng.admitted, "append", spy)
+    stats = eng.run_wave(1)
+    assert stats["admitted"] > 0
+    upstream = set().union(*(_python_nodes(d, "MapInPandas")
+                             for d in inputs))
+    own = seen["admission"] - upstream
+    assert len(own) == 2, own
+    assert any("norm_probe" in n for n in own), own
+    assert any("finish" in n for n in own), own
+
+
+def test_seen_filter_update_keys_in_jvm(spark, tmp_path, monkeypatch):
+    """The seen-filter update is one grouped Python stage: the segment
+    key is a JVM expression, so no MapInPandas precedes the group."""
+    from adscraper_spark.bloom import partition_for_host
+    from adscraper_spark.config import CrawlConfig
+    from adscraper_spark.engine import CrawlEngine
+
+    eng = CrawlEngine(spark, str(tmp_path / "none"), None,
+                      str(tmp_path / "w"), CrawlConfig())
+    rows = spark.createDataFrame(
+        [(f"https://h{i % 5}.test/p/{i}", f"h{i % 5}.test")
+         for i in range(50)] + [("https://x.test/", None)],
+        "url string, host string")
+    DataFrame = type(rows)  # the concrete class that defines collect
+    plans = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    eng._segment_map(rows, 1)
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    (df,) = plans
+    assert len(_python_nodes(df, "FlatMapGroupsInPandas")) == 1
+    assert not _python_nodes(df, "MapInPandas")
+    # every url landed in the segment its probe will read
+    for url, host in rows.collect():
+        seg = eng.bloom.load_segment(
+            partition_for_host(host or "", eng.config.bloom_partitions), 1)
+        assert seg.might_contain(url)

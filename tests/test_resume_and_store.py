@@ -589,3 +589,79 @@ def test_engine_results_table_prunes_by_wave(spark, small_setup,
     want = {r["url"] for r in eng.results.read(spark)
             .filter(f"wave = {target}").collect()}
     assert got == want and got
+
+
+def _jobs_in(spark, group: str, fn):
+    """(fn(), ids of the Spark jobs it started) — via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_pinned_read_equals_inferred_read(spark, finished_engine):
+    """Every engine table records its read schema at publish; reading
+    with it gives the inferred read's rows, column order and types, and
+    starts no schema-inference job."""
+    eng = finished_engine
+    for name, table in eng._tables.items():
+        snap = table.snapshot()
+        assert snap.schema is not None, name
+        pinned, jobs = _jobs_in(spark, f"pinned-{name}",
+                                lambda t=table: t.read(spark))
+        assert jobs == [], (name, jobs)
+        inferred = spark.read.parquet(*snap.files)
+        assert pinned.schema == inferred.schema, name
+        assert (sorted(map(repr, pinned.collect()))
+                == sorted(map(repr, inferred.collect()))), name
+
+
+def test_manifest_without_schema_reads_by_inference(spark, tmp_path):
+    """A manifest written before schemas were recorded (no key) still
+    reads — by inference — and later appends keep it unpinned, since
+    the older files' schema is unknown."""
+    import json
+    import os
+
+    t = SnapshotTable(str(tmp_path / "t"), bucket_col="a", num_buckets=4)
+    t.append(spark.createDataFrame([(1, "x"), (2, "y")], "a int, b string"))
+    sid = t.current_snapshot_id()
+    path = os.path.join(str(tmp_path / "t"), "meta", f"snap-{sid}.json")
+    with open(path) as f:
+        doc = json.load(f)
+    assert doc["schema"] == json.loads(
+        spark.read.parquet(*doc["files"]).schema.json())
+    del doc["schema"]
+    with open(path, "w") as f:
+        json.dump(doc, f)
+    assert t.snapshot().schema is None
+    got = t.read(spark)
+    assert got.columns == ["a", "b"]
+    assert sorted(map(tuple, got.collect())) == [(1, "x"), (2, "y")]
+    t.append(spark.createDataFrame([(3, "z")], "a int, b string"))
+    assert t.snapshot().schema is None
+    assert sorted(r["a"] for r in t.read(spark).collect()) == [1, 2, 3]
+    assert [r["a"] for r in t.read_since(spark, sid).collect()] == [3]
+    # a full rewrite records the schema again
+    t.compact(spark)
+    assert t.snapshot().schema is not None
+    assert sorted(r["a"] for r in t.read(spark).collect()) == [1, 2, 3]
+
+
+def test_disagreeing_appends_drop_the_schema_pin(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1,)], "a int"))
+    t.append(spark.createDataFrame([(2,)], "a int"))
+    assert t.snapshot().schema is not None  # agreeing appends keep it
+    t.append(spark.createDataFrame([(3, "z")], "a int, b string"))
+    assert t.snapshot().schema is None
+    assert sorted(r["a"] for r in t.read(spark).collect()) == [1, 2, 3]
+    t.append(spark.createDataFrame([(4,)], "a int"))
+    assert t.snapshot().schema is None  # once unknown, stays unknown
+    t.overwrite(spark.createDataFrame([(5,)], "a long"))
+    assert t.snapshot().schema["fields"][0]["type"] == "long"
+    t.commit_multi(appends=[spark.createDataFrame([(6,)], "a int")])
+    assert t.snapshot().schema is None

@@ -121,6 +121,28 @@ def test_bloom_partition_stable():
     assert 0 <= partition_for_host("a.test", 8) < 8
 
 
+def test_bloom_partition_col_matches_python(spark):
+    """The JVM-side segment key (what the seen-filter update groups by)
+    must pick the same segment as the Python probe for every host: a
+    mismatch would write a url's bits where the probe never looks."""
+    import random
+
+    from adscraper_spark.bloom import partition_col
+
+    rng = random.Random(7)
+    alphabet = string.ascii_lowercase + string.digits + ".-_éü日本"
+    hosts = [None, "", "é.test", "日本.jp", "xn--bcher-kva.test",
+             "host-0001.test"]
+    hosts += ["".join(rng.choice(alphabet)
+                      for _ in range(rng.randint(1, 40)))
+              for _ in range(1200)]
+    df = spark.createDataFrame([(h,) for h in hosts], "host string")
+    for n in (1, 7, 8, 32):
+        got = [r["p"] for r in df.select(
+            partition_col(df["host"], n).alias("p")).collect()]
+        assert got == [partition_for_host(h or "", n) for h in hosts], n
+
+
 def test_bloom_same_wave_updates_merge(tmp_path):
     """Two update_segment calls at the SAME wave must be cumulative
     (run_wave admissions + a streamed admit_seeds batch at wave N) —
@@ -208,22 +230,26 @@ def test_bench_compact_line_fits_driver_capture():
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
     queries = {n: 123.456 for n in bench.HEADLINE}
+    # keys as bench.py builds them from its core-count constants (they
+    # follow SPARK_GRAFT_CPUS and the BENCH_* overrides)
+    hi, lo = f"local[{bench.CPUS}]", f"local[{bench.SCALE_LOW}]"
+    klo, khi = f"local[{bench.KERNEL_LOW}]", f"local[{bench.KERNEL_HIGH}]"
     r = {"metric": "crawl frontier URLs scheduled+fetched per second "
-                   "(best config: local[32])",
+                   f"(best config: {hi})",
          "value": 99999.99, "unit": "urls/sec", "queries": queries,
          "sf": "0.1",
-         "crawl": {"local[32]": {"urls_per_sec": 99999.99},
-                   "local[8]": {"urls_per_sec": 99999.99},
+         "crawl": {hi: {"urls_per_sec": 99999.99},
+                   lo: {"urls_per_sec": 99999.99},
                    "scaling_ratio": 4.0, "scaling_efficiency": 0.999},
          "kernel_scaling": {
-             "local[2]": {"wall_sec": 999.99, "pages_per_sec": 9999.9},
-             "local[8]": {"wall_sec": 999.99, "pages_per_sec": 99999.9},
+             klo: {"wall_sec": 999.99, "pages_per_sec": 9999.9},
+             khi: {"wall_sec": 999.99, "pages_per_sec": 99999.9},
              "scaling_ratio": 4.0, "scaling_efficiency": 0.999},
          "e2e_pair": {
-             "local[2]": {"wall_sec": 999.99, "urls_per_sec": 9999.99,
-                          "urls_processed": 99999, "persist_sec": 99.9},
-             "local[8]": {"wall_sec": 999.99, "urls_per_sec": 99999.99,
-                          "urls_processed": 99999, "persist_sec": 99.9},
+             klo: {"wall_sec": 999.99, "urls_per_sec": 9999.99,
+                   "urls_processed": 99999, "persist_sec": 99.9},
+             khi: {"wall_sec": 999.99, "urls_per_sec": 99999.99,
+                   "urls_processed": 99999, "persist_sec": 99.9},
              "scaling_ratio": 4.0, "scaling_efficiency": 0.999,
              "corpus": {"pages": 48000, "content_scale": 64,
                         "seeds": 16000}}}
