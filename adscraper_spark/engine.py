@@ -34,9 +34,9 @@ by url (SnapshotTable bucket_col — the Iceberg bucket(N, url) transform
 analog): stable skew-free file layout here, and under real Iceberg the
 matching transform makes the per-wave anti-join co-partitioned (plain
 parquet reads drop distribution metadata, so local mode still pays the
-exchange). The engine's own wave appends write the logs at core width
-(a divisor of frontier_buckets, store.core_width) — one write task per
-core for a few hundred rows — and compaction rewrites them full width.
+exchange). Appends write the logs at core width (SnapshotTable.append:
+a divisor of frontier_buckets) — one write task per core for a wave's
+few hundred rows — and compaction rewrites them full width.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ from .corpus_layout import bucket_id_col, corpus_layout, prune_buckets
 from .extraction.udfs import extract_pages
 from .hashing import stable_hash64
 from .scheduler import plan_wave
-from .store import CommitError, SnapshotTable, core_width
+from .store import CommitError, SnapshotTable
 from .urlnorm import normalize_url, url_host, url_path
 
 
@@ -183,11 +183,6 @@ class CrawlEngine:
         self.processed = SnapshotTable(os.path.join(workdir, "processed"),
                                        bucket_col="url",
                                        num_buckets=buckets)
-        # File width of the engine's own log appends (a wave's few
-        # hundred rows): one write task per core, not one per bucket.
-        # compact() rewrites the logs at the full bucket count.
-        self._log_width = core_width(
-            buckets, spark.sparkContext.defaultParallelism)
         # Analysis tables carry manifest min/max bounds (Iceberg
         # manifest-entry lower/upper bounds analog, store.py): every
         # wave appends with a literal `wave`, so each data dir's bound
@@ -611,7 +606,7 @@ class CrawlEngine:
         uniq = self._seed_rows(seeds, wave_admitted=0)
         df = self._gated_seed_df(uniq).cache()
         n = df.count()
-        self.admitted.append(df, width=self._log_width)
+        self.admitted.append(df)
         self._update_bloom_distributed(df, 0)
         df.unpersist()
         self._append_crawl_event("bootstrapped", wave=0, n_seeds=n)
@@ -738,7 +733,7 @@ class CrawlEngine:
                     or self.admitted.current_snapshot_id() != gate_base):
                 diverted = True
             else:
-                sid = self.admitted.append(gated, width=self._log_width)
+                sid = self.admitted.append(gated)
                 # Fold ONLY the admitted-log advance into the latest
                 # manifest, pinning the snapshot id THIS append
                 # returned — re-reading HEAD could capture a later
@@ -843,7 +838,7 @@ class CrawlEngine:
             self._first_occurrence(staged)).cache()
         n = int(staged.count())
         if n:
-            self.admitted.append(staged, width=self._log_width)
+            self.admitted.append(staged)
             self._update_bloom_distributed(staged, wave)
         staged.unpersist()
         self._last_drained_id = cur
@@ -1230,8 +1225,8 @@ class CrawlEngine:
                            ) -> Iterator[pd.DataFrame]:
                 """One Python pass per candidate: normalize the link,
                 then probe the seen filter as of ``wave``. The probe
-                reads only the url (and its host), so running it before
-                the dedup gives each url the answer it would get after."""
+                reads only the url (and its host); the dedup below ORs
+                the answers of a url's rows."""
                 store = BloomStore(bloom_root, nparts)
                 segs: dict[int, object] = {}
                 for out in _norm_batches(batches):
@@ -1291,15 +1286,21 @@ class CrawlEngine:
                                    | (F.col("host") == F.col("src_host")))
             # in-wave dedup with deterministic lineage: min (depth,
             # kind, src, ad) — links beat landings at equal depth; the
-            # simulator takes the same tuple min. maybe_seen is a
-            # function of the url, so keying on it splits no group.
+            # simulator takes the same tuple min. maybe_seen is OR-ed
+            # over a url's rows, not grouped on: an intake batch may
+            # rewrite the segment at `wave` while probe tasks run, so
+            # two rows of one url can probe differently, and a url any
+            # task saw as a hit must go to the exact anti-join (a
+            # (url, False) group beside a (url, True) one would be
+            # admitted twice).
             # cache: the fresh/maybe split consumes this lineage twice,
             # and without the cache the norm+probe UDF re-runs on both
             # branches
             cand = (
-                cand.groupBy("url", "host", "path", "maybe_seen")
+                cand.groupBy("url", "host", "path")
                 .agg(F.min(F.struct("depth", "kind", "src_url",
-                                    "cand_ad_id")).alias("m"))
+                                    "cand_ad_id")).alias("m"),
+                     F.max("maybe_seen").alias("maybe_seen"))
                 .select("url", "host", "path",
                         F.col("m.depth").alias("src_depth"),
                         F.col("m.kind").alias("kind"),
@@ -1381,21 +1382,19 @@ class CrawlEngine:
         # job has finished, and rollback discards any snapshot not
         # pinned by a wave manifest (orphan bloom bits are safe: bloom
         # hits fall through to the exact anti-join).
-        appends = [(self.results, results_df),
+        appends = [(self.processed, processed_df),
+                   (self.results, results_df),
                    (self.ads, ads_df),
                    (self.requests, requests_df),
                    (self.iframes, iframes_df)]
         _t_persist = _time.time()
-        with ThreadPoolExecutor(max_workers=len(appends) + 4) as pool:
-            futs = [pool.submit(self.processed.append, processed_df,
-                                width=self._log_width)]
-            futs += [pool.submit(table.append, df) for table, df in appends]
+        with ThreadPoolExecutor(max_workers=len(appends) + 3) as pool:
+            futs = [pool.submit(table.append, df) for table, df in appends]
             count_fut = pool.submit(fetched.count)
             admissions_df, n_admitted, n_disallowed = run_admission()
             adm_fut = bloom_fut = None
             if admissions_df is not None:
-                adm_fut = pool.submit(self.admitted.append, admissions_df,
-                                      width=self._log_width)
+                adm_fut = pool.submit(self.admitted.append, admissions_df)
                 bloom_fut = pool.submit(
                     self._update_bloom_distributed, admissions_df,
                     wave + 1)

@@ -351,23 +351,24 @@ class SnapshotTable:
         return True
 
     # -- data ---------------------------------------------------------------
-    def _write_data(self, df: DataFrame, width: int | None = None
+    def _write_data(self, df: DataFrame, narrow: bool = False
                     ) -> tuple[list[str], dict]:
         """Write one data dir; returns ([dir], its read schema).
 
-        Bucketed tables write ``width`` files (default ``num_buckets``;
-        it must divide ``num_buckets``): file ``part-K`` holds exactly
-        the rows with ``pmod(murmur3(bucket_col), num_buckets) ≡ K (mod
-        width)``. A narrow write keeps every bucket whole inside one
-        file, so read_bucket_subset still prunes it, at ``width``
-        granularity."""
+        Bucketed tables write ``w`` files: ``num_buckets``, or with
+        ``narrow`` (append's small writes) ``core_width(num_buckets,
+        defaultParallelism)``, a divisor of it. File ``part-K`` holds
+        exactly the rows with ``pmod(murmur3(bucket_col), num_buckets)
+        ≡ K (mod w)``. A narrow write keeps every bucket whole inside
+        one file, so read_bucket_subset still prunes it, at ``w``
+        granularity; compact() rewrites it full width."""
         part = os.path.join(self.path, "data", uuid.uuid4().hex)
         schema = _nullable(df.schema).jsonValue()
         if self.bucket_col is not None and self.bucket_col in df.columns:
-            width = self.num_buckets if width is None else width
-            if width < 1 or self.num_buckets % width:
-                raise ValueError(f"width {width} does not divide "
-                                 f"num_buckets {self.num_buckets}")
+            width = self.num_buckets
+            if narrow:
+                width = core_width(
+                    width, df.sparkSession.sparkContext.defaultParallelism)
             df = df.repartition(width, self.bucket_col)
             df.write.mode("overwrite").parquet(part)
             # Per-dir layout marker (leading underscore → invisible to
@@ -473,14 +474,13 @@ class SnapshotTable:
                 out[d] = stats
         return out
 
-    def append(self, df: DataFrame, properties: dict | None = None,
-               width: int | None = None) -> int:
+    def append(self, df: DataFrame, properties: dict | None = None) -> int:
         """Appends are commutative, so a lost CAS retries against the
         new HEAD with the already-written data files (Iceberg's
         commit.retry semantics) — concurrent appenders to the same
-        table (streamed seed intake vs the wave loop) both land.
-        ``width``: file count of a bucketed write (see _write_data)."""
-        files, schema = self._write_data(df, width)
+        table (streamed seed intake vs the wave loop) both land. A
+        bucketed append writes core width (see _write_data)."""
+        files, schema = self._write_data(df, narrow=True)
         new_stats = self._footer_stats(files)
         last_err: CommitError | None = None
         for attempt in range(5):

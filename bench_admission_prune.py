@@ -95,6 +95,8 @@ def main() -> None:
         eng = CrawlEngine(spark, pages, robots, base, cfg_for(True))
         eng.bootstrap(seeds)
         eng.admitted.append(history_df(history))
+        # a compacted log: the history at full width, one file per bucket
+        eng.admitted.compact(spark)
         return base
 
     def one(base: str, prune: bool) -> tuple[float, int, int]:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from adscraper_spark.config import CrawlConfig
 from adscraper_spark.corpus import pages_rows
 from adscraper_spark.engine import CrawlEngine
-from adscraper_spark.store import SnapshotTable
+from adscraper_spark.store import SnapshotTable, core_width
 
 
 def _urls(spark, lo, hi):
@@ -25,18 +25,30 @@ def _urls(spark, lo, hi):
         F.col("id").alias("seq"))
 
 
-@pytest.mark.parametrize("width", [8, 4, 2])
+@pytest.mark.parametrize("compacted", [True, False],
+                         ids=["full_width", "core_width"])
 def test_read_bucket_subset_equals_filtered_full_read(spark, tmp_path,
-                                                      width):
-    """Full-width dirs prune to exactly the wanted buckets; a dir
-    written ``width`` wide (a divisor of num_buckets) prunes to the
-    files ``{b % width}``, i.e. to whole residue classes of buckets."""
-    n_buckets = 8
+                                                      compacted):
+    """A compacted (full-width) dir prunes to exactly the wanted
+    buckets; an appended dir, written at core width ``w`` (a divisor of
+    num_buckets), prunes to the files ``{b % w}``, i.e. to whole
+    residue classes of buckets."""
+    par = spark.sparkContext.defaultParallelism
+    n_buckets = 4 * par  # so that an append is narrower than the table
     t = SnapshotTable(str(tmp_path / "t"), bucket_col="url",
                       num_buckets=n_buckets)
-    t.append(_urls(spark, 0, 500), width=width)
+    t.append(_urls(spark, 0, 500))
     # second data dir — prune spans appends
-    t.append(_urls(spark, 500, 900), width=width)
+    t.append(_urls(spark, 500, 900))
+    width = core_width(n_buckets, par)
+    assert width < n_buckets
+    if compacted:
+        t.compact(spark)
+        width = n_buckets
+    dirs = t.snapshot().files
+    for d in dirs:
+        with open(os.path.join(d, "_bucket_layout.json")) as f:
+            assert json.load(f)["n"] == width
     want = {1, 3, 5}
     files = {b % width for b in want}
     sub = t.read_bucket_subset(spark, want)
@@ -49,36 +61,30 @@ def test_read_bucket_subset_equals_filtered_full_read(spark, tmp_path,
     # the subset scan opens only the selected files: ≤ |files| per
     # data dir, and strictly fewer files than the full read
     sub_files = sub.inputFiles()
-    assert len(sub_files) <= len(files) * 2
+    assert len(sub_files) <= len(files) * len(dirs)
     assert len(sub_files) < len(full.inputFiles())
-
-
-def test_narrow_append_rejects_non_divisor_width(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "t"), bucket_col="url", num_buckets=8)
-    with pytest.raises(ValueError):
-        t.append(_urls(spark, 0, 10), width=3)
 
 
 @pytest.mark.parametrize("change", [
     {"v": None},              # legacy marker: no layout version
     {"v": 1},                 # another layout version
     {"spark": "0.0.1"},       # written by another Spark (hash may differ)
-    {"n": 3},                 # width does not divide num_buckets
-    {"n": 16},                # wider than the table's bucket count
     {"hash": "xxhash64"},
     {"col": "seq"},
 ])
 def test_read_bucket_subset_refuses_unproven_marker(spark, tmp_path,
                                                     change):
     """A dir whose marker does not prove this table's layout is read
-    whole — never pruned by a layout it might not have."""
+    whole — never pruned by a layout it might not have. A width that
+    does not divide num_buckets is test_..._refuses_foreign_layout."""
     t = SnapshotTable(str(tmp_path / "t"), bucket_col="url", num_buckets=8)
-    t.append(_urls(spark, 0, 300), width=4)
+    t.append(_urls(spark, 0, 300))
     (d,) = t.snapshot().files
     path = os.path.join(d, "_bucket_layout.json")
     with open(path) as f:
         marker = json.load(f)
-    assert marker["v"] == 2 and marker["n"] == 4
+    assert marker["v"] == 2
+    assert marker["n"] == core_width(8, spark.sparkContext.defaultParallelism)
     assert marker["spark"] == spark.version
     marker.update(change)
     if marker["v"] is None:
@@ -126,16 +132,60 @@ def test_pruned_engine_matches_simulator(spark, corpus, corpus_spec,
     sim = simulate_crawl(pages, seeds, robots_rows, cfg)
     work = tempfile.mkdtemp(prefix="prune_engine_")
     eng = CrawlEngine(spark, corpus["pages"], corpus["robots"], work, cfg)
-    assert eng._log_width < cfg.frontier_buckets
+    assert core_width(cfg.frontier_buckets,
+                      spark.sparkContext.defaultParallelism
+                      ) < cfg.frontier_buckets
     eng.bootstrap(seeds)
     eng.run()
     assert eng.crawl_order() == sim.order
     assert eng.seen_set() == sim.seen
 
 
-def test_core_width_divides_bucket_count():
-    from adscraper_spark.store import core_width
+def test_split_probe_answers_admit_a_url_once(spark, corpus, corpus_spec,
+                                              seeds, robots_rows,
+                                              monkeypatch):
+    """The seen-filter probe runs per candidate row, before the dedup,
+    and an intake batch may rewrite the segment at ``wave`` while probe
+    tasks run — so rows of one url can get different answers. Here every
+    probe after a url's first in a task answers "hit" (a stale-vs-fresh
+    segment split, always in the safe false-positive direction): the url
+    must still be admitted once, and the crawl must match the oracle."""
+    from adscraper_spark import engine as engine_mod
+    from adscraper_spark.bloom import BloomStore
+    from adscraper_spark.simulator import simulate_crawl
 
+    class SplitProbeStore(BloomStore):
+        # defined locally, so it ships to the Python workers by value
+        def load_segment(self, partition, wave):
+            seg = super().load_segment(partition, wave)
+            probed = set()
+            exact = seg.might_contain
+
+            def might_contain(url):
+                hit = exact(url) or url in probed
+                probed.add(url)
+                return hit
+
+            seg.might_contain = might_contain
+            return seg
+
+    monkeypatch.setattr(engine_mod, "BloomStore", SplitProbeStore)
+    cfg = CrawlConfig(wave_seconds=10, default_budget=3, max_waves=3,
+                      max_depth=2)
+    pages = {r["url"]: r["html"] for r in pages_rows(corpus_spec)}
+    sim = simulate_crawl(pages, seeds, robots_rows, cfg)
+    work = tempfile.mkdtemp(prefix="split_probe_")
+    eng = CrawlEngine(spark, corpus["pages"], corpus["robots"], work, cfg)
+    eng.bootstrap(seeds)
+    eng.run()
+    dup = (eng.admitted.read(spark).groupBy("url").count()
+           .filter(F.col("count") > 1).collect())
+    assert dup == []
+    assert eng.crawl_order() == sim.order
+    assert eng.seen_set() == sim.seen
+
+
+def test_core_width_divides_bucket_count():
     assert core_width(32, 4) == 4
     assert core_width(32, 8) == 8
     assert core_width(32, 64) == 32

@@ -125,9 +125,9 @@ def test_bootstrap_keeps_marker_up_until_commit(spark, tmp_path,
     seen_at_append = []
     orig_append = eng.admitted.append
 
-    def observing_append(df, **kw):
+    def observing_append(df):
         seen_at_append.append(os.path.exists(eng._window_marker))
-        return orig_append(df, **kw)
+        return orig_append(df)
 
     monkeypatch.setattr(eng.admitted, "append", observing_append)
     eng.bootstrap([(i, u) for i, u in
